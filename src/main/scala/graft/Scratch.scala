@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Scratch storage for iterative operators ([[graft.operators.Graph]]
- * pageRank round snapshots, [[graft.operators.Components]] reliable
- * checkpoints). Resolution:
+ * pageRank round snapshots) and for the materialize-once rule
+ * ([[materialize]]: [[graft.operators.Components]] rounds,
+ * [[graft.pipelines.CorpusAssembly]] stage boundaries). Resolution:
  *
  *   1. `spark.graft.scratchDir`, if set — the CLUSTER deployment knob.
  *      Point it at a durable shared filesystem (HDFS/object store)
@@ -31,6 +32,29 @@ object Scratch {
   /** True when `spark.graft.scratchDir` is explicitly configured. */
   def configured(spark: SparkSession): Option[String] =
     spark.conf.getOption("spark.graft.scratchDir").filter(_.nonEmpty)
+
+  /** Materialize `df` once and return a leaf frame over the result,
+    * for a frame that several branches (or several rounds) read: each
+    * reader then scans the materialized rows instead of re-running the
+    * lineage. Eager reliable `checkpoint()` when a checkpoint dir is
+    * configured (the cluster deployment; survives executor loss), with
+    * `spark.graft.scratchDir` supplying that dir when none is set, so
+    * ONE knob moves every materialized intermediate to a durable shared
+    * filesystem. Otherwise `localCheckpoint()`: executor block storage,
+    * nothing written through the Hadoop FileSystem, nothing registered
+    * with the session's CacheManager; the blocks go when the returned
+    * frame is garbage collected. */
+  def materialize(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    if (sc.getCheckpointDir.isEmpty)
+      configured(df.sparkSession).foreach(root => sc.setCheckpointDir(s"$root/checkpoints"))
+    if (sc.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
+  }
+
+  /** True when [[materialize]] writes a reliable checkpoint. */
+  def materializesReliably(spark: SparkSession): Boolean =
+    spark.sparkContext.getCheckpointDir.isDefined || configured(spark).isDefined
 
   /** A per-call scratch subdirectory that is unique across CONCURRENT
     * APPLICATIONS sharing one configured scratch root (r20, ADVICE

@@ -5844,7 +5844,7 @@ object SparkEntry {
    * corpus assembly — canonical-URL dedup (C93) → quality filter
    * (C30) → exact dedup (C1) → near-dup dedup → decontaminate (C17)
    * → stratified sample (C25) → pack+materialize (C19/C19b),
-   * composed as ONE lazy plan by
+   * composed, with two materialized stage boundaries, by
    * [[graft.pipelines.CorpusAssembly.assemble]]. Every operator is
    * individually oracle-verified elsewhere on the board; THIS row
    * verifies their composition — the stage-to-stage schema contracts

@@ -58,27 +58,17 @@ object Components {
     // join back, so without truncation the logical tree grows
     // exponentially and analysis itself OOMs after a handful of
     // rounds. Eager checkpoint both materializes the round (the
-    // iteration's action) and resets the plan to a leaf scan —
-    // reliable checkpoint when a checkpoint dir is configured (the
-    // cluster deployment; survives executor loss), local otherwise.
-    // `spark.graft.scratchDir` (graft.Scratch) supplies the checkpoint
-    // dir when none is set, so ONE knob moves both this operator's and
-    // pageRank's iterative state to a durable shared filesystem.
-    def truncated(df: DataFrame): DataFrame = {
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        graft.Scratch.configured(df.sparkSession)
-          .foreach(root => sc.setCheckpointDir(s"$root/cc_checkpoints"))
-      if (sc.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    }
-
+    // iteration's action) and resets the plan to a leaf scan, under
+    // the shared materialize-once rule (graft.Scratch.materialize:
+    // reliable when a checkpoint dir or `spark.graft.scratchDir` is
+    // configured, local otherwise).
+    //
     // Materialize the incoming edges ONCE before anything derives from
     // them: the node universe and the initial orientation both read
     // this DataFrame, and the upstream edge generator is typically the
     // pipeline's most expensive stage (a banded/LSH candidate join) —
     // without this it executes twice.
-    val raw = truncated(
+    val raw = graft.Scratch.materialize(
       edges.select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d")))
     // node universe BEFORE dropping null-partner rows: an edge (5,
     // null) still names node 5, which must appear (as a singleton)
@@ -95,9 +85,7 @@ object Components {
     // Observation, so each round is one job where it was two (the
     // checkpoint pass plus a separate aggregate pass).
     def truncatedChecksummed(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
-      val reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined ||
-        graft.Scratch.configured(df.sparkSession).isDefined
-      if (reliable) {
+      if (graft.Scratch.materializesReliably(df.sparkSession)) {
         // r20 (ADVICE r19): an EAGER RELIABLE checkpoint materializes
         // its plan twice (internal count + checkpoint write), so a
         // ride-along Observation would report doubled (n, h) — and
@@ -106,14 +94,14 @@ object Components {
         // LEAF (cheap: a scan of what was just written), keeping the
         // Observation fusion only for the localCheckpoint path where
         // metrics fire exactly once.
-        val ck = truncated(df)
+        val ck = graft.Scratch.materialize(df)
         val r = ck.agg(count(lit(1)).as("n"),
           coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
             lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")).as("h")).head()
         (ck, (r.getLong(0), r.getDecimal(1)))
       } else {
         val obs = org.apache.spark.sql.Observation()
-        val ck = truncated(df.observe(obs,
+        val ck = graft.Scratch.materialize(df.observe(obs,
           count(lit(1)).as("n"),
           coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
             lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")).as("h")))

@@ -173,6 +173,15 @@ object TableSink {
    * ONE shuffle of current ∪ delta, no window, no join. Schema
    * evolution is `upsert`'s additive rule. Same crash-safe rename
    * swap.
+   *
+   * A `versionCol` that is NULL (or, with ANSI casts off, does not
+   * cast to a long) is refused loudly in the delta AND in the current
+   * table: it can neither win nor lose deterministically. Every write through this
+   * method is guarded, so only a table written by other means can hold
+   * such a row — and it then refuses every later call. Repair it
+   * outside `upsertVersioned`: rewrite the table with the offending
+   * rows dropped or given a valid version (e.g. `writeTruncate` of the
+   * filtered table to a new path, then swap it in), and resume.
    */
   def upsertVersioned(
       spark: org.apache.spark.sql.SparkSession,
@@ -236,7 +245,7 @@ object TableSink {
       .limit(1).select(col("__nullv")).collect()
     viol.headOption.foreach { r =>
       require(r.getInt(0) == 0,
-        s"upsertVersioned: NULL $versionCol in delta or current table")
+        s"upsertVersioned: NULL or non-castable $versionCol in delta or current table")
       throw new IllegalArgumentException(
         s"requirement failed: upsertVersioned: conflicting payloads tied at the winning " +
           s"($versionCol) version for some key on ${keyCols.mkString(",")} " +
@@ -284,7 +293,7 @@ object TableSink {
     require(keyCols.nonEmpty, "applyCdc needs at least one key column")
     require(delta.columns.contains(opCol), s"applyCdc: delta lacks op column $opCol")
     require(!keyCols.contains(opCol), s"applyCdc: op column $opCol cannot be a key")
-    import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
     // The op-domain check is UNCONDITIONAL (not gated by
     // checkUniqueKeys): a row whose op is neither U nor D would
     // otherwise be silently dropped by the U/D split below — data
@@ -294,13 +303,15 @@ object TableSink {
     // i.e. two full executions of the delta lineage per batch — at
     // scale the delta is often itself an expensive pipeline). The
     // shuffled bytes are the same as the old duplicate-key check alone:
-    // (key, n, badop) per distinct key, map-side combined. Predicate
-    // semantics are unchanged: a NULL op lands in the otherwise-0
-    // branch exactly as the old `filter` dropped it, and when both
-    // violations exist the op-domain error still wins (its old check
-    // ran first) via the badop-first ordering over the — normally
-    // empty — violating groups.
-    val badOpFlag = sum(when(!col(opCol).isin("U", "D"), 1).otherwise(0))
+    // (key, n, badop) per distinct key, map-side combined. A NULL op
+    // is a bad op: `isin` on NULL is NULL, so the predicate flags the
+    // GOOD ops and everything else — NULL included — lands in the
+    // otherwise-1 branch (negating `isin` would let NULL fall to the
+    // clean branch and then out of the U/D split unseen). When both
+    // violations exist the op-domain error still wins via the
+    // badop-first ordering over the — normally empty — violating
+    // groups.
+    val badOpFlag = sum(when(col(opCol).isin("U", "D"), 0).otherwise(1))
     if (checkUniqueKeys) {
       val viol = delta.groupBy(keyCols.map(delta(_)): _*)
         .agg(count(lit(1)).as("__n"), badOpFlag.as("__badop"))
@@ -314,7 +325,8 @@ object TableSink {
           s"requirement failed: applyCdc: delta has duplicate keys on ${keyCols.mkString(",")}")
       }
     } else {
-      val badOp = delta.filter(!col(opCol).isin("U", "D")).limit(1).count()
+      val badOp = delta.filter(!coalesce(col(opCol).isin("U", "D"), lit(false)))
+        .limit(1).count()
       require(badOp == 0, s"applyCdc: $opCol values must be 'U' or 'D'")
     }
     val ups0 = delta.filter(col(opCol) === "U").drop(opCol)

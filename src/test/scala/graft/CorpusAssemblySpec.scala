@@ -1,6 +1,9 @@
 package graft
 
 import graft.pipelines.CorpusAssembly
+import graft.pipelines.CorpusAssembly.{Config, StageNames}
+import graft.sinks.TableSink
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -172,5 +175,115 @@ class CorpusAssemblySpec extends AnyFunSuite {
     val kept = CorpusAssembly.canonDedup(rows, cfg)
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 2L, 3L), s"canon keep: $kept")
+  }
+
+  // --- assembleStaged's materialized stage boundaries -----------------------
+
+  /** A seeded corpus every stage has work on: quality rejects, exact
+   * copies, near copies (last word changed), and docs that quote a
+   * benchmark-slice doc (id ≡ 0 mod 97), over two languages and three
+   * shards. */
+  private def corpus(seed: Long, n: Int): Seq[(Long, String, String, String)] = {
+    val r = new scala.util.Random(seed)
+    val stops = Seq("the", "a", "of", "and", "to", "in")
+    def fresh(k: Int): String = Seq.fill(k)(
+      if (r.nextInt(4) == 0) stops(r.nextInt(stops.length)) else s"w${r.nextInt(400)}")
+      .mkString(" ")
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    (0 until n).map { i =>
+      val u = r.nextDouble()
+      val text =
+        if (i > 20 && u < 0.1) texts(r.nextInt(i))
+        else if (i > 20 && u < 0.2) texts(r.nextInt(i)).split(" ").dropRight(1).mkString(" ") + " tail"
+        else if (u < 0.25) "too short text"
+        else if (i > 97 && u < 0.3)
+          texts(97 * r.nextInt(i / 97)).split(" ").take(6).mkString(" ") + " " + fresh(30)
+        else fresh(30 + r.nextInt(40))
+      texts += text
+      (i.toLong, text, if (r.nextBoolean()) "en" else "es", s"s${r.nextInt(3)}")
+    }
+  }
+
+  private def writeCorpus(seed: Long, n: Int, path: String): DataFrame = {
+    corpus(seed, n).toDF("doc_id", "text", "lang", "source").repartition(4)
+      .write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** The reference: the public stage functions composed lazily, in the
+   * order and with the raw benchmark slice assembleStaged uses. */
+  private def composed(docs: DataFrame, near: (DataFrame, Config) => DataFrame,
+      stages: Seq[String], cfg: Config = Config()): DataFrame = {
+    val bench = docs.filter(pmod(col(cfg.idCol), lit(cfg.benchMod)) === 0L)
+    StageNames.filter(stages.contains).foldLeft(docs) { (df, stage) =>
+      stage match {
+        case "canon"   => CorpusAssembly.canonDedup(df, cfg)
+        case "quality" => CorpusAssembly.qualityFilter(df, cfg)
+        case "exact"   => CorpusAssembly.exactDedup(df, cfg)
+        case "near"    => near(df, cfg)
+        case "decon"   => CorpusAssembly.decontaminate(df, bench, cfg)
+        case "sample"  => CorpusAssembly.sample(df, cfg)
+        case "pack"    => CorpusAssembly.pack(df, cfg)
+      }
+    }
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  private def tmp(name: String) =
+    java.nio.file.Files.createTempDirectory("corpus").toString + "/" + name
+
+  test("assembleStaged reads each document at most twice per call (main path + bench slice)") {
+    val n = 1200
+    val docs = writeCorpus(7L, n, tmp("docs"))
+    val out = tmp("out")
+    val (_, ran) = RunProbe(spark) {
+      TableSink.writeTruncate(CorpusAssembly.assembleStaged(docs), out)
+    }
+    assert(spark.read.parquet(out).count() > 0L, "pipeline packed nothing")
+    // the lazy composition scans and quality-filters the documents once
+    // per branch of the near and decon stages: 4 reads per call
+    assert(ran.fileRecordsRead <= 2L * n,
+      s"documents read ${ran.fileRecordsRead} times-rows for $n rows (at most ${2 * n})")
+  }
+
+  test("assembleStaged equals the lazily composed stages (both near plugs, a subset from near)") {
+    val docs = writeCorpus(11L, 900, tmp("docs"))
+    val cases = Seq(
+      ("minhash, all stages", CorpusAssembly.nearDedupMinhash _, StageNames),
+      ("exact, all stages", CorpusAssembly.nearDedupExact _, StageNames),
+      ("minhash, from near", CorpusAssembly.nearDedupMinhash _,
+        Seq("near", "decon", "sample", "pack")),
+      ("minhash, up to near", CorpusAssembly.nearDedupMinhash _,
+        Seq("quality", "exact", "near")))
+    cases.foreach { case (what, near, stages) =>
+      val got = rows(CorpusAssembly.assembleStaged(docs, nearDedup = near, stages = stages))
+      assert(got.nonEmpty, s"$what: empty output")
+      assert(got == rows(composed(docs, near, stages)), s"$what: output differs")
+    }
+    // the fixture exercises every killing stage
+    val q = CorpusAssembly.qualityFilter(docs)
+    val ex = CorpusAssembly.exactDedup(q)
+    val nd = CorpusAssembly.nearDedupMinhash(ex)
+    val dc = composed(docs, CorpusAssembly.nearDedupMinhash _, Seq("quality", "exact", "near", "decon"))
+    val counts = Seq(docs, q, ex, nd, dc).map(_.count())
+    counts.sliding(2).foreach { case Seq(a, b) =>
+      assert(b < a, s"a stage kept everything: per-stage counts $counts")
+    }
+  }
+
+  test("assembleStaged over changed input returns the changed result; nothing stays cached") {
+    val path = tmp("docs")
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val first = rows(CorpusAssembly.assembleStaged(writeCorpus(3L, 600, path)))
+    assert(cache.isEmpty, "a call left an entry in the session's CacheManager")
+    val changed = writeCorpus(4L, 600, path)
+    val second = rows(CorpusAssembly.assembleStaged(changed))
+    assert(cache.isEmpty, "a call left an entry in the session's CacheManager")
+    assert(second != first, "the second call returned the first input's result")
+    assert(second == rows(composed(changed, CorpusAssembly.nearDedupMinhash _, StageNames)))
   }
 }

@@ -226,13 +226,15 @@ class TableSinkSpec extends AnyFunSuite {
           (2L, Some("z"), None: Option[Long])).toDF("k", "v", "ver"),
         Seq("k"), "ver")
     }
-    assert(both.getMessage.contains("NULL"), both.getMessage)
     val equalPayload = intercept[IllegalArgumentException] {
       TableSink.upsertVersioned(spark, dir,
         Seq((1L, Some("a"), Some(5L)), (1L, Some("a"), None: Option[Long]))
           .toDF("k", "v", "ver"), Seq("k"), "ver")
     }
-    assert(equalPayload.getMessage.contains("NULL"), equalPayload.getMessage)
+    Seq(both, equalPayload).foreach { e =>
+      assert(e.getMessage.contains(
+        "NULL or non-castable ver in delta or current table"), e.getMessage)
+    }
     // failed batches must not have created the table
     assert(!new java.io.File(dir).exists())
   }
@@ -319,6 +321,34 @@ class TableSinkSpec extends AnyFunSuite {
     }
     assert(dup.getMessage.contains("duplicate keys"), dup.getMessage)
     // failed batches must not have touched the table
+    assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("applyCdc fused guard: a NULL op is a bad op, not a silent drop") {
+    // `isin` on a NULL op is NULL; the guard must count it as bad
+    // instead of letting the row fall out of the U/D split unseen
+    val dir = java.nio.file.Files.createTempDirectory("sink").toString + "/cdcn"
+    TableSink.applyCdc(spark, dir,
+      Seq((1L, "a", "U")).toDF("k", "v", "_op"), Seq("k"))
+    val e = intercept[IllegalArgumentException] {
+      TableSink.applyCdc(spark, dir,
+        Seq((2L, "b", "U"), (3L, "c", null.asInstanceOf[String])).toDF("k", "v", "_op"),
+        Seq("k"))
+    }
+    assert(e.getMessage.contains("must be 'U' or 'D'"), e.getMessage)
+    assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("applyCdc with the uniqueness check waived: a NULL op is still refused") {
+    val dir = java.nio.file.Files.createTempDirectory("sink").toString + "/cdcn2"
+    TableSink.applyCdc(spark, dir,
+      Seq((1L, "a", "U")).toDF("k", "v", "_op"), Seq("k"))
+    val e = intercept[IllegalArgumentException] {
+      TableSink.applyCdc(spark, dir,
+        Seq((2L, "b", "U"), (3L, "c", null.asInstanceOf[String])).toDF("k", "v", "_op"),
+        Seq("k"), checkUniqueKeys = false)
+    }
+    assert(e.getMessage.contains("must be 'U' or 'D'"), e.getMessage)
     assert(spark.read.parquet(dir).count() == 1)
   }
 
