@@ -100,20 +100,35 @@ object OptProbe {
         // evidence for action-count claims — e.g. the applyCdc guard
         // fusion — which never show in the RESULT's plan). Usage:
         //   runMain graft.OptProbe <sfDir> jobcount <query> [query...]
+        // The listener bus is asynchronous: after each run a fence job
+        // is submitted and the probe waits for its job end, which the
+        // bus delivers after every event the run posted. Fence jobs
+        // are not counted.
+        val sc = spark.sparkContext
+        val fence = "graft.optprobe.fence"
         val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              jobs.incrementAndGet(): Unit
-            }
-          })
+        val fenceJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+        val fenced = new java.util.concurrent.Semaphore(0)
+        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            if (Option(js.properties).exists(_.getProperty("spark.job.description") == fence))
+              fenceJob.set(js.jobId)
+            else jobs.incrementAndGet(): Unit
+          override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+            if (je.jobId == fenceJob.get) fenced.release()
+        })
+        def settle(): Unit = {
+          sc.setJobDescription(fence)
+          try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+          require(fenced.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS),
+            "listener bus did not deliver the fence job")
+        }
         args.drop(2).foreach { q =>
           noop(SparkEntry.queries(q)(spark, dir)) // warm (JIT, scratch bootstrap)
-          Thread.sleep(500)
+          settle()
           val before = jobs.get()
           noop(SparkEntry.queries(q)(spark, dir))
-          Thread.sleep(1500) // listener bus is async; settle before reading
+          settle()
           println(s"PROBE jobcount $q: ${jobs.get() - before} jobs")
         }
       case "aqeplan" =>

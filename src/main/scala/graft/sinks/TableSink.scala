@@ -1,6 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 
 /**
  * Table sink with the reference's load semantics (reference:
@@ -105,17 +106,21 @@ object TableSink {
    *   trickle-update case never shuffles the big table.
    * - `delta` must be unique per key — which row of a duplicate pair
    *   wins would otherwise be partition-order nondeterminism. Checked
-   *   with one cheap aggregation over delta (skippable via
-   *   `checkUniqueKeys = false` when the producer guarantees it).
+   *   by a per-key window count on the delta rows the write unions in
+   *   (skippable via `checkUniqueKeys = false` when the producer
+   *   guarantees it).
    * - Schema evolution, additive only: a delta column the table lacks
    *   is ADDED (existing rows null-filled) — the first new attribute a
    *   daily feed grows must not abort the MERGE. A type change on a
    *   shared column, or a delta that DROPS a table column, still fails
    *   loudly: both silently rewrite history (coerced values / vanished
    *   data) instead of appending to it.
-   * - Same crash-safe rename swap as `compact`: the merged result is
-   *   fully written to a `__upsert_tmp` sibling before the target
-   *   moves, so a crash never leaves a half-table.
+   * - One Spark action per call, the crash-safe guarded swap of
+   *   [[swapInto]]: the merged result is written to an `__upsert_tmp`
+   *   sibling, the duplicate-key guard observed on that write is
+   *   checked after it and before the rename swap, and a refused batch
+   *   leaves the table untouched. A first batch creates the table the
+   *   same way.
    */
   def upsert(
       spark: org.apache.spark.sql.SparkSession,
@@ -125,33 +130,24 @@ object TableSink {
       format: String = "parquet",
       checkUniqueKeys: Boolean = true): Unit = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    if (checkUniqueKeys) {
-      import org.apache.spark.sql.functions.{count, lit}
-      val dup = delta.groupBy(keyCols.map(delta(_)): _*)
-        .agg(count(lit(1)).as("__n")).filter("__n > 1").limit(1).count()
-      require(dup == 0, s"upsert: delta has duplicate keys on ${keyCols.mkString(",")}")
+    import org.apache.spark.sql.functions.{col, count, lit, max}
+    val t = target(spark, path, "upsert")
+    val guard = Observation()
+    val rows =
+      if (!checkUniqueKeys) delta
+      else delta.withColumn("__n", count(lit(1)).over(byKey(keyCols)))
+        .observe(guard, max(col("__n")).as("n")).drop("__n")
+    val out =
+      if (!t.exists) rows
+      else {
+        val evolved = evolveAdditively(spark.read.format(format).load(path), delta, "upsert")
+        mergeInto(evolved, rows, delta, keyCols)
+      }
+    swapInto(t, out, format, "upsert") {
+      require(!checkUniqueKeys || observedMax(guard)("n") <= 1,
+        s"upsert: delta has duplicate keys on ${keyCols.mkString(",")}")
+      true
     }
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) {
-      delta.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
-      return
-    }
-    // Hive-partitioned layouts are REJECTED for the same reason as
-    // compact: load() would infer the partition columns and the merged
-    // rewrite (no partitionBy) would silently flatten the directory
-    // layout — losing partition pruning and baking inferred
-    // partition-column types into the data files.
-    if (fs.listStatus(hPath).exists(e =>
-        e.isDirectory && e.getPath.getName.contains("=")))
-      throw new IllegalArgumentException(
-        s"upsert: $path is Hive-partitioned; upsert per partition directory instead")
-    val current = spark.read.format(format).load(path)
-    val evolved = evolveAdditively(current, delta, "upsert")
-    val merged = evolved
-      .join(delta.select(keyCols.map(delta(_)): _*), keyCols, "left_anti")
-      .unionByName(delta)
-    swapInto(fs, hPath, merged, format, "upsert")
   }
 
   /**
@@ -170,9 +166,11 @@ object TableSink {
    * loudly: silently picking one is partition-order nondeterminism.
    * Exact same-row duplicates collapse harmlessly. Scale shape: one
    * (score, row)-struct max aggregate on the key — map-side combined,
-   * ONE shuffle of current ∪ delta, no window, no join. Schema
-   * evolution is `upsert`'s additive rule. Same crash-safe rename
-   * swap.
+   * ONE shuffle of current ∪ delta, no window, no join — run ONCE per
+   * call: both guards are observed on the aggregate's output as the
+   * merged table is written to its `__upsertVersioned_tmp` sibling,
+   * and checked after that write and before the rename swap of
+   * [[swapInto]]. Schema evolution is `upsert`'s additive rule.
    *
    * A `versionCol` that is NULL (or, with ANSI casts off, does not
    * cast to a long) is refused loudly in the delta AND in the current
@@ -196,18 +194,11 @@ object TableSink {
     require(!keyCols.contains(versionCol),
       s"upsertVersioned: version column $versionCol cannot be a key")
     import org.apache.spark.sql.functions.{col, max, min, struct, when}
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val t = target(spark, path, "upsertVersioned")
     val all =
-      if (!fs.exists(hPath)) delta
-      else {
-        if (fs.listStatus(hPath).exists(e =>
-            e.isDirectory && e.getPath.getName.contains("=")))
-          throw new IllegalArgumentException(
-            s"upsertVersioned: $path is Hive-partitioned; merge per partition directory")
-        val current = spark.read.format(format).load(path)
-        evolveAdditively(current, delta, "upsertVersioned").unionByName(delta)
-      }
+      if (!t.exists) delta
+      else evolveAdditively(spark.read.format(format).load(path), delta, "upsertVersioned")
+        .unionByName(delta)
     // ONE aggregate: per key, the whole row riding a (version, row)
     // struct max — versions compare in long space (epoch / LSN /
     // offset). Conflict detection at the WINNING version only (a
@@ -221,41 +212,35 @@ object TableSink {
     val payload = all.columns.filterNot(keyCols.contains)
     val v = col(versionCol).cast("long")
     val rowStruct = struct(payload.map(col): _*)
-    // The NULL-version guard (a NULL can neither win nor lose
-    // deterministically) rides this same aggregate as a per-key flag
-    // instead of its own full pass over the delta (r20, guide §1.2 —
-    // the applyCdc guard-fusion argument): one action runs both
-    // fail-loud checks, still strictly BEFORE any write. The flag is
-    // checked FIRST — with a NULL in play the struct comparators'
-    // null ordering is meaningless, so no conflict verdict is read
-    // until null-freeness is established; coverage is now current ∪
-    // delta, which is delta-only by induction through this API (every
-    // prior write was guarded) and additionally refuses a hand-written
-    // table row carrying a NULL version instead of silently
-    // mis-merging it.
+    // Both guards are max flags observed on the aggregate's output, so
+    // they ride the one write. The NULL flag is read FIRST — with a
+    // NULL in play the struct comparators' null ordering is
+    // meaningless, so no tie verdict counts until null-freeness is
+    // established. Coverage is current ∪ delta: delta-only by
+    // induction through this API (every prior write was guarded), and
+    // a hand-written table row carrying a NULL version is refused
+    // instead of silently mis-merged.
+    val guard = Observation()
     val merged = all
       .groupBy(keyCs: _*)
       .agg(
         max(struct(v.as("__v"), rowStruct.as("__row"))).as("__hi"),
         min(struct((-v).as("__nv"), rowStruct.as("__row"))).as("__lo"),
         max(when(v.isNull, 1).otherwise(0)).as("__nullv"))
-    val viol = merged
-      .filter(col("__nullv") > 0 || col("__hi.__row") =!= col("__lo.__row"))
-      .orderBy(col("__nullv").desc)
-      .limit(1).select(col("__nullv")).collect()
-    viol.headOption.foreach { r =>
-      require(r.getInt(0) == 0,
-        s"upsertVersioned: NULL or non-castable $versionCol in delta or current table")
-      throw new IllegalArgumentException(
-        s"requirement failed: upsertVersioned: conflicting payloads tied at the winning " +
-          s"($versionCol) version for some key on ${keyCols.mkString(",")} " +
-          "— ties must not be silently resolved")
-    }
+      .observe(guard, max(col("__nullv")).as("nullv"),
+        max(when(col("__hi.__row") =!= col("__lo.__row"), 1).otherwise(0)).as("tie"))
     val resolved = merged.select(
       keyCs ++ payload.map(c => col(s"__hi.__row.$c").as(c)): _*)
-    if (!fs.exists(hPath))
-      resolved.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
-    else swapInto(fs, hPath, resolved, format, "upsertVersioned")
+    swapInto(t, resolved, format, "upsertVersioned") {
+      val g = observedMax(guard)
+      require(g("nullv") == 0,
+        s"upsertVersioned: NULL or non-castable $versionCol in delta or current table")
+      require(g("tie") == 0,
+        s"upsertVersioned: conflicting payloads tied at the winning " +
+          s"($versionCol) version for some key on ${keyCols.mkString(",")} " +
+          "— ties must not be silently resolved")
+      true
+    }
   }
 
   /**
@@ -280,7 +265,12 @@ object TableSink {
    * Scale shape is identical to `upsert`: one anti join of the current
    * table against ALL delta keys (updates and deletes alike — a small
    * delta broadcasts, so the big side never shuffles), then a union
-   * with the upsert rows. Same crash-safe tmp/bak rename swap.
+   * with the upsert rows. One Spark action per call, the guarded
+   * tmp/bak rename swap of [[swapInto]]: the op-domain and
+   * duplicate-key guards are observed on the delta as the merged table
+   * is written to its `__applyCdc_tmp` sibling, and checked after that
+   * write and before the swap. A delete-only first batch creates no
+   * table.
    */
   def applyCdc(
       spark: org.apache.spark.sql.SparkSession,
@@ -293,43 +283,25 @@ object TableSink {
     require(keyCols.nonEmpty, "applyCdc needs at least one key column")
     require(delta.columns.contains(opCol), s"applyCdc: delta lacks op column $opCol")
     require(!keyCols.contains(opCol), s"applyCdc: op column $opCol cannot be a key")
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
+    import org.apache.spark.sql.functions.{col, count, lit, max, when}
+    val t = target(spark, path, "applyCdc")
     // The op-domain check is UNCONDITIONAL (not gated by
     // checkUniqueKeys): a row whose op is neither U nor D would
     // otherwise be silently dropped by the U/D split below — data
-    // loss, not a performance knob.
+    // loss, not a performance knob. A NULL op is a bad op: `isin` on
+    // NULL is NULL, so the predicate flags the GOOD ops and everything
+    // else — NULL included — lands in the otherwise-1 branch.
     //
-    // Both fail-loud guards run in ONE aggregate action (they were two,
-    // i.e. two full executions of the delta lineage per batch — at
-    // scale the delta is often itself an expensive pipeline). The
-    // shuffled bytes are the same as the old duplicate-key check alone:
-    // (key, n, badop) per distinct key, map-side combined. A NULL op
-    // is a bad op: `isin` on NULL is NULL, so the predicate flags the
-    // GOOD ops and everything else — NULL included — lands in the
-    // otherwise-1 branch (negating `isin` would let NULL fall to the
-    // clean branch and then out of the U/D split unseen). When both
-    // violations exist the op-domain error still wins via the
-    // badop-first ordering over the — normally empty — violating
-    // groups.
-    val badOpFlag = sum(when(col(opCol).isin("U", "D"), 0).otherwise(1))
-    if (checkUniqueKeys) {
-      val viol = delta.groupBy(keyCols.map(delta(_)): _*)
-        .agg(count(lit(1)).as("__n"), badOpFlag.as("__badop"))
-        .filter(col("__n") > 1 || col("__badop") > 0)
-        .orderBy(col("__badop").desc)
-        .limit(1).collect()
-      viol.headOption.foreach { r =>
-        require(r.getLong(r.fieldIndex("__badop")) == 0,
-          s"applyCdc: $opCol values must be 'U' or 'D'")
-        throw new IllegalArgumentException(
-          s"requirement failed: applyCdc: delta has duplicate keys on ${keyCols.mkString(",")}")
-      }
-    } else {
-      val badOp = delta.filter(!coalesce(col(opCol).isin("U", "D"), lit(false)))
-        .limit(1).count()
-      require(badOp == 0, s"applyCdc: $opCol values must be 'U' or 'D'")
-    }
-    val ups0 = delta.filter(col(opCol) === "U").drop(opCol)
+    // Both guards are observed on the whole delta BEFORE the U filter
+    // (a Filter does not push through CollectMetrics, so every row is
+    // seen), on the branch the write unions in.
+    val guard = Observation()
+    val badOp = max(when(col(opCol).isin("U", "D"), 0).otherwise(1)).as("badop")
+    val flagged =
+      if (!checkUniqueKeys) delta.observe(guard, badOp)
+      else delta.withColumn("__n", count(lit(1)).over(byKey(keyCols)))
+        .observe(guard, badOp, max(col("__n")).as("n")).drop("__n")
+    val ups0 = flagged.filter(col(opCol) === "U").drop(opCol)
     // D wins over a same-key U within one batch (class doc): only
     // reachable when the unique-keys check is waived, and the anti
     // join runs delta-vs-delta — broadcast-sized, never the table
@@ -337,26 +309,23 @@ object TableSink {
     else ups0.join(
       delta.filter(col(opCol) === "D").select(keyCols.map(col): _*).distinct(),
       keyCols, "left_anti")
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) {
-      // First batch bootstraps the table from its upserts; a delete-only
-      // first batch has nothing to create and must not plant an empty
-      // table whose schema would then pin future evolution.
-      if (ups.limit(1).count() > 0)
-        ups.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
-      return
+    // First batch bootstraps the table from its upserts; a delete-only
+    // first batch has nothing to create and must not plant an empty
+    // table whose schema would then pin future evolution.
+    val anyUp = Observation()
+    val out =
+      if (!t.exists) ups.observe(anyUp, max(lit(1)).as("rows"))
+      else {
+        val evolved = evolveAdditively(spark.read.format(format).load(path), ups, "applyCdc")
+        mergeInto(evolved, ups, delta, keyCols)
+      }
+    swapInto(t, out, format, "applyCdc") {
+      // a bad op beats a duplicate key
+      val g = observedMax(guard)
+      require(g("badop") == 0, s"applyCdc: $opCol values must be 'U' or 'D'")
+      require(g("n") <= 1, s"applyCdc: delta has duplicate keys on ${keyCols.mkString(",")}")
+      t.exists || observedMax(anyUp)("rows") > 0
     }
-    if (fs.listStatus(hPath).exists(e =>
-        e.isDirectory && e.getPath.getName.contains("=")))
-      throw new IllegalArgumentException(
-        s"applyCdc: $path is Hive-partitioned; apply per partition directory instead")
-    val current = spark.read.format(format).load(path)
-    val evolved = evolveAdditively(current, ups, "applyCdc")
-    val merged = evolved
-      .join(delta.select(keyCols.map(delta(_)): _*), keyCols, "left_anti")
-      .unionByName(ups)
-    swapInto(fs, hPath, merged, format, "applyCdc")
   }
 
   /**
@@ -387,25 +356,110 @@ object TableSink {
     }
   }
 
-  /** Crash-safe swap: fully materialize `merged` beside the target,
-   * then rename through a backup (rolled back on failure). */
-  private def swapInto(
-      fs: org.apache.hadoop.fs.FileSystem,
-      hPath: org.apache.hadoop.fs.Path,
-      merged: DataFrame,
-      format: String,
-      who: String): Unit = {
-    val path = hPath.toString
-    val tmp = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + s"__${who}_tmp")
-    val bak = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + s"__${who}_bak")
-    merged.write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
-    if (!fs.rename(hPath, bak))
-      throw new java.io.IOException(s"$who: rename $path -> $bak failed")
-    if (!fs.rename(tmp, hPath)) {
-      fs.rename(bak, hPath) // roll back; original untouched
-      throw new java.io.IOException(s"$who: rename $tmp -> $path failed (rolled back)")
+  private def byKey(keyCols: Seq[String]) =
+    org.apache.spark.sql.expressions.Window.partitionBy(
+      keyCols.map(org.apache.spark.sql.functions.col): _*)
+
+  /** `rows` plus the `evolved` table rows whose key `delta` does not
+   * touch, in the table's column order. The observed `rows` lead the
+   * union so the write runs in the session their guard Observation is
+   * registered with. */
+  private def mergeInto(
+      evolved: DataFrame, rows: DataFrame, delta: DataFrame, keyCols: Seq[String]): DataFrame =
+    rows.unionByName(evolved.join(delta.select(keyCols.map(delta(_)): _*), keyCols, "left_anti"))
+      .select(evolved.columns.map(org.apache.spark.sql.functions.col): _*)
+
+  /** The observed max-style guard metrics of a finished write; a metric
+   * over no rows (NULL, or absent when the optimizer dropped an empty
+   * branch) reads 0. Max stays exact if a subtree runs twice. */
+  private def observedMax(obs: Observation): String => Long = {
+    val m = obs.get
+    k => m.get(k).collect { case n: Number => n.longValue }.getOrElse(0L)
+  }
+
+  private def sibling(hPath: Path, suffix: String): Path =
+    new Path(hPath.toString.stripSuffix("/") + s"__$suffix")
+
+  /** The sinks that swap through [[swapInto]]. */
+  private val swapSinks = Seq("upsert", "applyCdc", "upsertVersioned")
+
+  /** An incremental sink's target, resolved before its one write. */
+  private final case class Target(fs: FileSystem, path: Path, exists: Boolean)
+
+  /** Resolves `path` for sink `who`. A crash between the two renames
+   * of [[swapInto]] leaves `path` absent and the before state in an
+   * `__<sink>_bak` sibling: that bak is renamed back into place and
+   * the stale tmp dropped BEFORE the existence check, so the call
+   * merges into the restored table instead of bootstrapping a new one
+   * from the delta alone. A Hive-partitioned target is refused: load()
+   * would infer the partition columns and the merged rewrite (no
+   * partitionBy) would silently flatten the directory layout — losing
+   * partition pruning and baking inferred partition-column types into
+   * the data files. */
+  private def target(
+      spark: org.apache.spark.sql.SparkSession, path: String, who: String): Target = {
+    val hPath = new Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val exists = fs.exists(hPath) || {
+      val residue = swapSinks.filter(w => fs.exists(sibling(hPath, s"${w}_bak")))
+      require(residue.size <= 1,
+        s"$who: $path is absent and has several swap backups (${residue.mkString(",")}); " +
+          "restore one by hand")
+      residue.foreach { w =>
+        val bak = sibling(hPath, s"${w}_bak")
+        if (!fs.rename(bak, hPath))
+          throw new java.io.IOException(s"$who: restore $bak -> $path failed")
+        fs.delete(sibling(hPath, s"${w}_tmp"), true)
+      }
+      residue.nonEmpty
     }
-    fs.delete(bak, true): Unit // best effort; leftover bak is harmless
+    if (exists && fs.listStatus(hPath).exists(e =>
+        e.isDirectory && e.getPath.getName.contains("=")))
+      throw new IllegalArgumentException(
+        s"$who: $path is Hive-partitioned; $who per partition directory instead")
+    Target(fs, hPath, exists)
+  }
+
+  /** Crash-safe guarded swap — the ONE Spark action of an upsert,
+   * applyCdc or upsertVersioned call. `out` carries the call's guards
+   * as Observations; it is fully written to a `__<who>_tmp` sibling,
+   * then `guard` reads the observed metrics on the driver: throwing
+   * refuses the batch, `false` discards a write that would create
+   * nothing. Either way the tmp is deleted and the target is never
+   * touched. A passing guard moves the tmp into place — directly for a
+   * first batch, else through an `__<who>_bak` backup that is rolled
+   * back on failure.
+   *
+   * Trade-off: a refused batch pays for the discarded tmp write; in
+   * return a passing batch runs its delta lineage once instead of once
+   * for a separate guard action and again for the write, and
+   * upsertVersioned runs its whole-table merge aggregate once instead
+   * of twice. */
+  private def swapInto(t: Target, out: DataFrame, format: String, who: String)(
+      guard: => Boolean): Unit = {
+    val path = t.path.toString
+    val tmp = sibling(t.path, s"${who}_tmp")
+    out.write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
+    val publish =
+      try guard
+      catch { case e: Throwable => t.fs.delete(tmp, true); throw e }
+    if (!publish) t.fs.delete(tmp, true): Unit
+    else if (!t.exists) {
+      if (!t.fs.rename(tmp, t.path))
+        throw new java.io.IOException(s"$who: rename $tmp -> $path failed")
+    } else {
+      val bak = sibling(t.path, s"${who}_bak")
+      // a bak left by a swap that crashed after its second rename is
+      // garbage; renaming onto it would nest the table inside it
+      t.fs.delete(bak, true)
+      if (!t.fs.rename(t.path, bak))
+        throw new java.io.IOException(s"$who: rename $path -> $bak failed")
+      if (!t.fs.rename(tmp, t.path)) {
+        t.fs.rename(bak, t.path) // roll back; original untouched
+        throw new java.io.IOException(s"$who: rename $tmp -> $path failed (rolled back)")
+      }
+      t.fs.delete(bak, true): Unit // best effort; leftover bak is harmless
+    }
   }
 
   /**

@@ -449,7 +449,8 @@ object EventStream {
    * sink at a table format with transactional row-level merge.
    * `checkUniqueKeys` defaults to false because update-mode
    * aggregation output is unique per key per trigger by construction,
-   * making the per-batch duplicate-scan job pure overhead — but a
+   * making the per-batch duplicate check (a per-key window over the
+   * batch, riding the merge write) pure overhead — but a
    * caller WITHOUT that guarantee (e.g. flatMapGroupsWithState
    * emitting several rows per key per batch) must pass true, or
    * duplicate-key rows insert into the serving table permanently. */

@@ -21,7 +21,10 @@ final case class Ran(stages: Seq[StageInfo], plans: Seq[String]) {
 /** Records what `body` runs through the listener bus. The bus is
   * asynchronous, so a fence job runs after `body` and the probe waits
   * for its job end: the shared queue delivers events in order, so by
-  * then every event `body` posted has been seen. */
+  * then every event `body` posted has been seen. A fence also runs
+  * before `body`, and what it settles is dropped: an action finished
+  * just before the probe can otherwise reach the newly registered
+  * listeners late and be counted as `body`'s. */
 object RunProbe {
 
   def apply[T](spark: SparkSession)(body: => T): (T, Ran) = {
@@ -30,7 +33,7 @@ object RunProbe {
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val fenceJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val fenced = new java.util.concurrent.Semaphore(0)
     val jobs = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         stages.add(e.stageInfo): Unit
@@ -38,7 +41,7 @@ object RunProbe {
         if (Option(e.properties).exists(_.getProperty("spark.job.description") == fence))
           fenceJob.set(e.jobId)
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == fenceJob.get) fenced.countDown()
+        if (e.jobId == fenceJob.get) fenced.release()
     }
     val sql = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
@@ -47,12 +50,18 @@ object RunProbe {
     }
     sc.addSparkListener(jobs)
     spark.listenerManager.register(sql)
-    try {
-      val out = body
+    def settle(): Unit = {
       sc.setJobDescription(fence)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      assert(fenced.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus did not deliver the fence job")
+    }
+    try {
+      settle()
+      stages.clear()
+      plans.clear()
+      val out = body
+      settle()
       (out, Ran(stages.toArray(Array.empty[StageInfo]).toSeq,
         plans.toArray(Array.empty[String]).toSeq))
     } finally {

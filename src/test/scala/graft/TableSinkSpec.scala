@@ -372,6 +372,141 @@ class TableSinkSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir2).as[(Long, String)].collect().toSeq == Seq((2L, "b")))
   }
 
+  // --- guarded swap: one action per call, crash residue ----------------------
+
+  private def tempDir(leaf: String): String =
+    java.nio.file.Files.createTempDirectory("sink").toString + "/" + leaf
+
+  /** Fails instead of hanging: an Observation whose metric never fires
+    * would block the sink's guard read forever. */
+  private def within[T](body: => T): T = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    Await.result(Future(body)(ExecutionContext.global),
+      scala.concurrent.duration.Duration(120, "s"))
+  }
+
+  private def kvv(dir: String): Seq[(Long, String, Long)] =
+    spark.read.parquet(dir).select("k", "v", "ver").as[(Long, String, Long)]
+      .collect().toSeq.sortBy(_._1)
+
+  /** Every file of the table directory with its bytes. */
+  private def tableBytes(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().map(f =>
+      f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+
+  /** `__<sink>_tmp` / `__<sink>_bak` siblings left beside the table. */
+  private def swapSiblings(dir: String): Seq[String] = {
+    val f = new java.io.File(dir)
+    f.getParentFile.list().filter(_.startsWith(f.getName + "__")).toSeq
+  }
+
+  private val base3 = Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L))
+
+  test("upsert, applyCdc and upsertVersioned run one SQL action on an existing table") {
+    def actions(body: => Unit): Int = RunProbe(spark)(body)._2.plans.size
+    val u = tempDir("u1")
+    TableSink.writeTruncate(base3.toDF("k", "v", "ver"), u)
+    assert(actions(TableSink.upsert(spark, u,
+      Seq((2L, "B", 2L), (4L, "d", 2L)).toDF("k", "v", "ver"), Seq("k"))) == 1)
+    assert(kvv(u) == Seq((1L, "a", 1L), (2L, "B", 2L), (3L, "c", 1L), (4L, "d", 2L)))
+    for (unique <- Seq(true, false)) {
+      val c = tempDir(s"c1_$unique")
+      TableSink.writeTruncate(base3.toDF("k", "v", "ver"), c)
+      assert(actions(TableSink.applyCdc(spark, c,
+        Seq((2L, "B", 2L, "U"), (3L, "c", 2L, "D")).toDF("k", "v", "ver", "_op"),
+        Seq("k"), checkUniqueKeys = unique)) == 1, s"checkUniqueKeys = $unique")
+      assert(kvv(c) == Seq((1L, "a", 1L), (2L, "B", 2L)))
+    }
+    val v = tempDir("v1")
+    TableSink.writeTruncate(base3.toDF("k", "v", "ver"), v)
+    assert(actions(TableSink.upsertVersioned(spark, v,
+      Seq((2L, "B", 2L), (3L, "old", 0L)).toDF("k", "v", "ver"), Seq("k"), "ver")) == 1)
+    assert(kvv(v) == Seq((1L, "a", 1L), (2L, "B", 2L), (3L, "c", 1L)))
+  }
+
+  test("observed guards finish on empty deltas, delete-only batches and empty tables") {
+    val none = Seq.empty[(Long, String, Long)].toDF("k", "v", "ver")
+    val noOps = Seq.empty[(Long, String, Long, String)].toDF("k", "v", "ver", "_op")
+    // an empty delta leaves an existing table as it was
+    val e = tempDir("e")
+    TableSink.writeTruncate(base3.toDF("k", "v", "ver"), e)
+    within(TableSink.upsert(spark, e, none, Seq("k")))
+    within(TableSink.applyCdc(spark, e, noOps, Seq("k")))
+    within(TableSink.applyCdc(spark, e, noOps, Seq("k"), checkUniqueKeys = false))
+    within(TableSink.upsertVersioned(spark, e, none, Seq("k"), "ver"))
+    assert(kvv(e) == base3)
+    // ... and an empty or delete-only first batch creates no CDC table
+    val e0 = tempDir("e0")
+    within(TableSink.applyCdc(spark, e0, noOps, Seq("k")))
+    within(TableSink.applyCdc(spark, e0,
+      Seq((1L, "a", 1L, "D")).toDF("k", "v", "ver", "_op"), Seq("k"), checkUniqueKeys = false))
+    assert(!new java.io.File(e0).exists() && swapSiblings(e0).isEmpty)
+    // a delete-only batch on an existing table
+    within(TableSink.applyCdc(spark, e,
+      Seq((1L, "a", 1L, "D"), (3L, "c", 1L, "D")).toDF("k", "v", "ver", "_op"), Seq("k")))
+    assert(kvv(e) == Seq((2L, "b", 1L)))
+    // an existing but empty current table
+    val one = Seq((5L, "e", 1L))
+    for (sink <- Seq("upsert", "applyCdc", "upsertVersioned")) {
+      val z = tempDir(s"z_$sink")
+      TableSink.writeTruncate(none, z)
+      within(sink match {
+        case "upsert" => TableSink.upsert(spark, z, one.toDF("k", "v", "ver"), Seq("k"))
+        case "applyCdc" => TableSink.applyCdc(spark, z,
+          Seq((5L, "e", 1L, "U")).toDF("k", "v", "ver", "_op"), Seq("k"))
+        case _ => TableSink.upsertVersioned(spark, z, one.toDF("k", "v", "ver"), Seq("k"), "ver")
+      })
+      assert(kvv(z) == one, sink)
+    }
+    // a violation carried only by D rows is still seen: the guard
+    // observes the delta before the U filter drops them
+    val d = tempDir("d")
+    TableSink.writeTruncate(base3.toDF("k", "v", "ver"), d)
+    val dup = intercept[IllegalArgumentException](within(TableSink.applyCdc(spark, d,
+      Seq((4L, "d", 2L, "U"), (1L, "a", 2L, "D"), (1L, "a", 3L, "D"))
+        .toDF("k", "v", "ver", "_op"), Seq("k"))))
+    assert(dup.getMessage.contains("duplicate keys"), dup.getMessage)
+    assert(kvv(d) == base3)
+  }
+
+  test("a refused batch leaves the table byte-identical and no swap sibling") {
+    for (sink <- Seq("upsert", "applyCdc", "upsertVersioned")) {
+      val dir = tempDir(s"r_$sink")
+      TableSink.writeTruncate(base3.toDF("k", "v", "ver"), dir)
+      val before = tableBytes(dir)
+      intercept[IllegalArgumentException](within(sink match {
+        case "upsert" => TableSink.upsert(spark, dir,
+          Seq((4L, "x", 2L), (4L, "y", 2L)).toDF("k", "v", "ver"), Seq("k"))
+        case "applyCdc" => TableSink.applyCdc(spark, dir,
+          Seq((4L, "x", 2L, "X")).toDF("k", "v", "ver", "_op"), Seq("k"))
+        case _ => TableSink.upsertVersioned(spark, dir,
+          Seq((1L, "x", 5L), (1L, "y", 5L)).toDF("k", "v", "ver"), Seq("k"), "ver")
+      }))
+      assert(tableBytes(dir) == before, sink)
+      assert(swapSiblings(dir).isEmpty, s"$sink left ${swapSiblings(dir)}")
+    }
+  }
+
+  for (sink <- Seq("upsert", "applyCdc", "upsertVersioned"))
+    test(s"$sink restores a table a crash left in its swap backup") {
+      // the residue of a swap cut between rename(path -> bak) and
+      // rename(tmp -> path): no table, the before state in the bak, a
+      // finished tmp beside it
+      val dir = tempDir(s"crash_$sink")
+      TableSink.writeTruncate(base3.toDF("k", "v", "ver"), dir + s"__${sink}_bak")
+      TableSink.writeTruncate(Seq((9L, "tmp", 9L)).toDF("k", "v", "ver"), dir + s"__${sink}_tmp")
+      sink match {
+        case "upsert" => TableSink.upsert(spark, dir,
+          Seq((4L, "d", 2L)).toDF("k", "v", "ver"), Seq("k"))
+        case "applyCdc" => TableSink.applyCdc(spark, dir,
+          Seq((4L, "d", 2L, "U")).toDF("k", "v", "ver", "_op"), Seq("k"))
+        case _ => TableSink.upsertVersioned(spark, dir,
+          Seq((4L, "d", 2L)).toDF("k", "v", "ver"), Seq("k"), "ver")
+      }
+      assert(kvv(dir) == base3 :+ ((4L, "d", 2L)))
+      assert(swapSiblings(dir).isEmpty, s"left ${swapSiblings(dir)}")
+    }
+
   // --- compactPartitioned ---------------------------------------------------
 
   test("compactPartitioned merges each leaf, keeps layout + data + pruning") {
